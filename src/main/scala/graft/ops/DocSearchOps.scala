@@ -578,35 +578,27 @@ object DocSearchOps {
   /** SpanFirstQuery [B lucene/core/src/java/org/apache/lucene/search/spans/SpanFirstQuery.java]:
     * docs where the term/phrase span occurs within the first `end` token
     * positions (endPosition <= end, stop-word slots counted — the classic
-    * "match in the title/lead" span query). Same distributed two-phase
-    * pipeline as phrases, with the position check swapped for the window
-    * test; ascending anchors make the per-doc check early-exit.
+    * "match in the title/lead" span query): SFirst over the analyzed
+    * term/phrase leaf.
     */
   def searchSpanFirst(spark: SparkSession, sfDir: String,
-      terms: Seq[String] = Seq("window"), end: Int = 12): DataFrame = {
-    val r = reader(spark, sfDir)
-    QueryEngine.matchAllTerms(r, terms, spanEnd = end)
-      .toDF("docId")
-      .join(r.docMeta.select(col("docId"), col("path")), "docId")
-      .select(col("path").cast("long").as("doc_id"))
-      .orderBy(asc("doc_id"))
-  }
+      terms: Seq[String] = Seq("window"), end: Int = 12): DataFrame =
+    spanTreeDocs(spark, sfDir,
+      graft.search.SpanNode.SFirst(QueryEngine.spanTermOf(terms), end))
 
   /** SpanNearQuery [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java]:
     * all terms co-occur within a window of total slack <= slop — in query
     * order (NearSpansOrdered: strictly increasing positions) or any order
-    * (NearSpansUnordered: minimal covering window). Same distributed
-    * two-phase pipeline as phrases; the window check replaces adjacency.
+    * (NearSpansUnordered: minimal covering window). Each analyzed term is
+    * its own single-token subspan of an SNear.
     */
   def searchSpanNear(spark: SparkSession, sfDir: String,
       terms: Seq[String] = Seq("merge", "sort"), slop: Int = 4,
       ordered: Boolean = true): DataFrame = {
-    val r = reader(spark, sfDir)
-    QueryEngine.matchAllTerms(r, terms, nearSlop = slop, nearOrdered = ordered)
-      .toDF("docId")
-      .join(r.docMeta.select(col("docId"), col("path")), "docId")
-      .select(col("path").cast("long").as("doc_id"))
-      .orderBy(asc("doc_id"))
+    import graft.search.SpanNode._
+    spanTreeDocs(spark, sfDir, SNear(
+      QueryEngine.queryPositions(terms).map { case (t, _) => term(t) },
+      slop, ordered))
   }
 
   /** Nested span algebra [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java]:
@@ -614,40 +606,25 @@ object DocSearchOps {
     * an exact-phrase span ("key order" as ONE subspan of width 2), chained
     * in order within the slop window. Lucene composes spans arbitrarily;
     * this exercises the two shapes that differ (width-1 terms vs multi-
-    * position phrase spans) through the composite kernel.
+    * position phrase spans).
     */
   def searchSpanNearPhrase(spark: SparkSession, sfDir: String,
       subspans: Seq[Seq[String]] = Seq(Seq("merge"), Seq("key", "order")),
-      slop: Int = 20, ordered: Boolean = true): DataFrame = {
-    val r = reader(spark, sfDir)
-    QueryEngine.matchSpanNearComposite(r, subspans, slop, ordered)
-      .toDF("docId")
-      .join(r.docMeta.select(col("docId"), col("path")), "docId")
-      .select(col("path").cast("long").as("doc_id"))
-      .orderBy(asc("doc_id"))
-  }
+      slop: Int = 20, ordered: Boolean = true): DataFrame =
+    spanTreeDocs(spark, sfDir, graft.search.SpanNode.SNear(
+      subspans.map(QueryEngine.spanTermOf(_)), slop, ordered))
 
   /** SpanNotQuery [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanNotQuery.java]
     * with a symmetric pre/post window: docs where some `include` occurrence
-    * sits more than `dist` positions from every `exclude` occurrence. Docs
-    * without the exclude term qualify trivially (include-docs anti-join
-    * exclude-docs); docs with both run the positional window check — three
-    * narrow passes over two terms' pushed-down postings.
+    * sits more than `dist` positions from every `exclude` occurrence. The
+    * exclude side is not required, so docs without it qualify in the same
+    * single pass over the two terms' pushed-down postings.
     */
   def searchSpanNot(spark: SparkSession, sfDir: String,
       include: String = "merge", exclude: String = "sort",
-      dist: Int = 3): DataFrame = {
-    val r = reader(spark, sfDir)
-    val withInc = QueryEngine.matchAllTerms(r, Seq(include)).toDF("docId")
-    val withExc = QueryEngine.matchAllTerms(r, Seq(exclude)).toDF("docId")
-    val bothOk = QueryEngine.matchAllTerms(r, Seq(include, exclude),
-      spanNotDist = dist).toDF("docId")
-    withInc.join(withExc, Seq("docId"), "left_anti")
-      .union(bothOk)
-      .join(r.docMeta.select(col("docId"), col("path")), "docId")
-      .select(col("path").cast("long").as("doc_id"))
-      .orderBy(asc("doc_id"))
-  }
+      dist: Int = 3): DataFrame =
+    spanTreeDocs(spark, sfDir, graft.search.SpanNode.SNot(
+      QueryEngine.spanTermOf(Seq(include)), QueryEngine.spanTermOf(Seq(exclude)), dist))
 
   /** Shared doc_id projection for the composable span-tree entries. */
   private def spanTreeDocs(spark: SparkSession, sfDir: String,

@@ -1,9 +1,9 @@
 package graft.search
 
 import graft._
-import graft.core.{Analyzer, Bm25, BmwScorer, PhraseMatcher, PostingBlocks}
+import graft.core.{Analyzer, Bm25, BmwScorer, PhraseMatcher, Similarity}
 import graft.index.Index
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -23,14 +23,23 @@ case class BucketTermBlocks(bucket: Int, term: String, blocks: Seq[PostingBlock]
   */
 case class BucketFilter(bucket: Int, lang: String, chunk: Long, docIds: Array[Long])
 
-/** Search read path (SURVEY.md §3.2):
+/** Search read path (SURVEY.md §3.2) — Lucene's Weight -> Scorer pipeline
+  * cut as ONE Spark bucket pipeline; every query shape differs only in the
+  * per-bucket evaluator:
   *
-  *   postings.filter(term isin queryTerms)      <- Parquet row-group skip
-  *   -> per-term global df (tiny agg, broadcast)    == CollectionStatistics
-  *   -> flatMap blocks to docId buckets             (narrow; query terms only)
-  *   -> groupByKey(bucket) [cogroup lang filter]
-  *   -> BmwScorer per bucket: block-max WAND, local k-heap
-  *   -> per-query exact top-k merge                 == TopDocs.merge
+  *   postings.filter(term isin queryTerms)   <- Parquet row-group skip
+  *   -> flatMap blocks to docId buckets      (narrow; query terms only)
+  *   -> groupByKey(bucket), byTerm per task  (bucketBlocks, blocksByTerm)
+  *   -> per-bucket evaluator:
+  *        scored   (search, searchTrees): per-term global stats broadcast
+  *                 (== CollectionStatistics), cogroup with the lang /
+  *                 tombstone filter channel, BmwScorer block-max WAND or
+  *                 the clause-scorer tree into a local k-heap
+  *                 -> exact per-query top-k merge (== TopDocs.merge)
+  *        unscored (matchPositional: conjunctions, phrases, span and
+  *                 interval trees, payloads): conjunction or disjunction
+  *                 driver plus a per-doc positional counter
+  *                 -> tombstone anti-join
   *
   * Tie-break is (score desc, docId asc) end-to-end — mandatory for
   * rank-identity (BASELINE.json north_rule).
@@ -129,6 +138,59 @@ object QueryEngine {
     if (i < 0) None else Some(term.substring(0, i))
   }
 
+  /** Positional query analysis: tokens of `raw` with their QUERY positions.
+    * Stop words advance the position counter but emit nothing — the
+    * query-side mirror of the index's StopFilter position-increment holes,
+    * so "state of art" yields ("state", 0), ("art", 2).
+    */
+  def queryPositions(raw: Seq[String],
+      stopWords: Set[String] = Analyzer.EnglishStopWords): Seq[(String, Int)] = {
+    var qpos = 0
+    raw.flatMap { r =>
+      Analyzer.tokenize(r).map { tok => val p = qpos; qpos += 1; (tok, p) }
+    }.filterNot { case (t, _) => stopWords.contains(t) }
+  }
+
+  /** A raw term or phrase as one span leaf: analyzed members at their
+    * stop-hole query offsets (a single term is the width-1 case).
+    */
+  def spanTermOf(raw: Seq[String],
+      stopWords: Set[String] = Analyzer.EnglishStopWords): SpanNode.STerm = {
+    val ps = queryPositions(raw, stopWords)
+    require(ps.nonEmpty, s"no indexable terms in $raw")
+    SpanNode.STerm(ps.map(_._1), ps.map(_._2))
+  }
+
+  /** The pushed-down postings scan, re-keyed by docId bucket: only row
+    * groups holding `terms` are read (postings are term-sorted within
+    * partitions at merge time), and each term's blocks split by the corpus
+    * partition their docs live in.
+    */
+  private def bucketBlocks(reader: Index.Reader,
+      terms: Seq[String]): Dataset[BucketTermBlocks] = {
+    val spark = reader.spark
+    import spark.implicits._
+    reader.postingsForTerms(terms).where($"term".isin(terms: _*))
+      .as[TermPostings].flatMap { tp =>
+        tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
+          .map { case (bucket, bs) =>
+            BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
+          }
+      }
+  }
+
+  /** One bucket's blocks per term in docId order (a term arrives in one
+    * row per salt slice and snapshot).
+    */
+  private def blocksByTerm(
+      rows: Iterator[BucketTermBlocks]): Map[String, Array[PostingBlock]] = {
+    val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
+    rows.foreach { r =>
+      byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
+    }
+    byTerm.iterator.map { case (t, bs) => t -> bs.sortBy(_.firstDocId).toArray }.toMap
+  }
+
   /** Above this many total requested hits (Σ q.k), the final merge flips
     * from the Solr-mergeIds-style driver collect (rows <= k·buckets·queries,
     * one RTT, no extra stage) to a distributed groupByKey(qid) merge with a
@@ -136,163 +198,190 @@ object QueryEngine {
     */
   val MergeCollectMax: Long = 100000L
 
+  /** A query's result page: (qid, k, searchAfter cursor). */
+  private type Page = (String, Int, Option[(Double, Long)])
+
   /** Per-query heap honoring the searchAfter score cursor, if any. */
-  private def heapFor(q: QuerySpec): BmwScorer.TopKHeap = q.searchAfter match {
-    case Some((s, d)) => new BmwScorer.TopKHeap(q.k, s, d)
-    case None => new BmwScorer.TopKHeap(q.k)
-  }
-
-  def search(reader: Index.Reader, rawQueries: Seq[QuerySpec],
-      sim: graft.core.Similarity = Bm25(),
-      stopWords: Set[String] = Analyzer.EnglishStopWords,
-      mergeCollectMax: Long = MergeCollectMax): Dataset[ScoredDoc] = {
-    val spark = reader.spark
-    import spark.implicits._
-
-    val queries = rawQueries.map(analyzeQuery(_, stopWords))
-    val allTerms: Seq[String] =
-      queries.flatMap(q => q.should ++ q.must ++ q.mustNot).distinct
-    if (allTerms.isEmpty || queries.forall(q => q.should.isEmpty && q.must.isEmpty))
-      return spark.emptyDataset[ScoredDoc]
-
-    // Catalyst/Parquet pushdown: only row groups containing query terms are
-    // read (postings are term-sorted within partitions at merge time).
-    val p = reader.postingsForTerms(allTerms).where($"term".isin(allTerms: _*))
-
-    // global per-term stats across salt slices + snapshots == Lucene's
-    // TermStatistics gathering at createWeight time — slim-termdict lookup,
-    // cached on the reader so repeat terms skip the job
-    val termStats: Map[String, (Long, Long)] = reader.termStatsMap(allTerms)
-    val stats = reader.stats
-    // per-field collection stats: extra analyzed fields score against their
-    // OWN avgdl (Lucene keeps norms + stats per field)
-    val fieldAvgdl: Map[String, Double] = allTerms.flatMap(fieldOf).distinct
-      .map(f => f -> reader.fieldStats(f).avgdl).toMap
-    val statsB = spark.sparkContext.broadcast(
-      (termStats, stats, queries, sim, fieldAvgdl))
-    // unique epoch for this search run: ThetaBoard slots are keyed
-    // (epoch, qid) so concurrent/repeated searches never share floors
-    val thetaEpoch = java.util.UUID.randomUUID().toString
-
-    val buckets: Dataset[BucketTermBlocks] = p.as[TermPostings].flatMap { tp =>
-      tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
-        .map { case (bucket, bs) =>
-          BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
-        }
+  private def heapFor(k: Int, after: Option[(Double, Long)]): BmwScorer.TopKHeap =
+    after match {
+      case Some((s, d)) => new BmwScorer.TopKHeap(k, s, d)
+      case None => new BmwScorer.TopKHeap(k)
     }
 
-    // metadata filters (lang pushdown) + delete tombstones ride the
-    // chunked bucket-keyed filter channel
-    val filterLangs = queries.flatMap(_.langFilter).distinct
-    val filters: Dataset[BucketFilter] = bucketFilters(reader, filterLangs)
+  /** What every scored bucket task needs from the driver: global per-term
+    * (df, ttf) across salt slices + snapshots (== Lucene's TermStatistics
+    * gathering at createWeight time), collection stats, per-field avgdl,
+    * the model and the queries.
+    */
+  private case class ScoringSpec[Q](termStats: Map[String, (Long, Long)],
+      stats: IndexStats, fieldAvgdl: Map[String, Double], sim: Similarity,
+      queries: Seq[Q])
 
-    val perBucket: Dataset[ScoredDoc] = buckets
-      .groupByKey(_.bucket)
-      .cogroup(filters.groupByKey(_.bucket)) { (bucket, blockRows, filterRows) =>
-        val (dfMap, st, qs, sim, fAvgdl) = statsB.value
-        val cache = sim.normTable(st.avgdl)
-        val fieldCaches: Map[String, Array[Double]] =
-          fAvgdl.map { case (f, a) => f -> sim.normTable(a) }
-        def cacheFor(term: String): Array[Double] =
-          fieldOf(term).flatMap(fieldCaches.get).getOrElse(cache)
-        val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
-        blockRows.foreach { r =>
-          byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
-        }
-        if (byTerm.isEmpty) Iterator.empty
-        else {
-          val allowedByLang: Map[String, Array[Long]] =
-            assembleFilters(filterRows)
+  /** One bucket's scoring state: norm caches, term weights, fresh term
+    * iterators, and the live-docs / lang filters off the filter channel.
+    */
+  private final class Bucket(spec: ScoringSpec[_],
+      val byTerm: Map[String, Array[PostingBlock]],
+      filters: Map[String, Array[Long]]) {
+    val sim: Similarity = spec.sim
+    private val cache = sim.normTable(spec.stats.avgdl)
+    // extra analyzed fields score against their OWN avgdl (Lucene keeps
+    // norms + stats per field)
+    private val fieldCaches: Map[String, Array[Double]] =
+      spec.fieldAvgdl.map { case (f, a) => f -> sim.normTable(a) }
 
-          def iter(term: String, tag: Int,
-              boost: Double = 1.0): Option[BmwScorer.TermIterator] =
-            byTerm.get(term).map { bs =>
-              val blocks = bs.sortBy(_.firstDocId).toArray
-              val (df, ttf) = dfMap.getOrElse(term, (0L, 0L))
-              val w = sim.weightFull(df, ttf, st.docCount, st.sumTotalTermFreq, boost)
-              new BmwScorer.TermIterator(w, cacheFor(term), blocks, tag, sim)
-            }
-
-          qs.iterator.flatMap { q =>
-            def qiter(term: String, tag: Int): Option[BmwScorer.TermIterator] =
-              iter(term, tag, q.boosts.getOrElse(term, 1.0))
-            if (q.must.nonEmpty && !q.must.distinct.forall(byTerm.contains)) {
-              // a required term is absent from this bucket: no hits here
-              // (checked on DISTINCT terms — duplicated MUST clauses must
-              // not mask a genuinely missing one)
-              Iterator.empty
-            } else {
-              val musts = q.must.zipWithIndex.flatMap { case (t, i) => qiter(t, i) }
-              val shoulds = q.should.zipWithIndex
-                .flatMap { case (t, i) => qiter(t, i) }.toArray
-              if (q.must.isEmpty && shoulds.isEmpty) Iterator.empty
-              else {
-                val nots = q.mustNot.zipWithIndex
-                  .flatMap { case (t, i) => iter(t, i) }.toArray
-                val notEx = BmwScorer.notExcluded(nots)
-                val deleted = allowedByLang.getOrElse(DeletedKey, Array.emptyLongArray)
-                val live: Long => Boolean =
-                  if (deleted.isEmpty) _ => true
-                  else d => java.util.Arrays.binarySearch(deleted, d) < 0
-                val accept: Long => Boolean = q.langFilter match {
-                  case None => d => live(d) && notEx(d)
-                  case Some(lang) =>
-                    val allowed = allowedByLang.getOrElse(lang, Array.emptyLongArray)
-                    d => java.util.Arrays.binarySearch(allowed, d) >= 0 &&
-                      live(d) && notEx(d)
-                }
-                // per-executor theta sharing across this query's buckets
-                // (MaxScoreAccumulator role — see BmwScorer.ThetaBoard)
-                val heap = heapFor(q).shareTheta(s"$thetaEpoch/${q.qid}")
-                val tb = q.dismaxTiebreak.getOrElse(-1.0)
-                if (q.must.nonEmpty)
-                  // most-selective-first == highest maxScore (lowest df) first
-                  BmwScorer.conjunctionTopK(
-                    musts.sortBy(-_.maxScore).toArray, shoulds, q.k, accept,
-                    heap, tb, q.minShouldMatch)
-                else
-                  BmwScorer.wandTopK(shoulds, q.k, accept, heap, tb,
-                    q.minShouldMatch)
-                heap.drain().iterator.map { case (d, s) => ScoredDoc(q.qid, d, s) }
-              }
-            }
-          }
-        }
+    private def weight(df: Long, ttf: Long, boost: Double): Double =
+      sim.weightFull(df, ttf, spec.stats.docCount, spec.stats.sumTotalTermFreq, boost)
+    def termWeight(t: String, boost: Double = 1.0): Double = {
+      val (df, ttf) = spec.termStats.getOrElse(t, (0L, 0L))
+      weight(df, ttf, boost)
+    }
+    /** SynonymQuery blended stats: df = max over members, ttf = sum. */
+    def synonymWeight(syns: Seq[String], boost: Double): Double = {
+      val st = syns.map(t => spec.termStats.getOrElse(t, (0L, 0L)))
+      weight(st.map(_._1).max, st.map(_._2).sum, boost)
+    }
+    /** A fresh iterator per call: clauses cursor independently even when
+      * they reference the same term.
+      */
+    def iter(term: String, boost: Double, tag: Int = 0): Option[BmwScorer.TermIterator] =
+      byTerm.get(term).map { bs =>
+        new BmwScorer.TermIterator(termWeight(term, boost),
+          fieldOf(term).flatMap(fieldCaches.get).getOrElse(cache), bs, tag, sim)
       }
+    def allowed(lang: String): Array[Long] =
+      filters.getOrElse(lang, Array.emptyLongArray)
+    val live: Long => Boolean = {
+      val deleted = allowed(DeletedKey)
+      if (deleted.isEmpty) _ => true
+      else d => java.util.Arrays.binarySearch(deleted, d) < 0
+    }
+  }
 
-    // exact global top-k per query == TopDocs.merge. Small Σk: driver-side
-    // (SURVEY.md §3.2 — candidates are <= k per bucket per query, and the
-    // collect replaces a whole extra shuffle stage, the same ids-then-fields
-    // coordinator role Solr's mergeIds plays). Large Σk: distributed
-    // groupByKey(qid) with a bounded heap per group — memory O(k) per task
-    // no matter how many buckets contributed.
-    val kByQid = queries.map(q => q.qid -> q.k).toMap
-    if (queries.map(_.k.toLong).sum <= mergeCollectMax) {
+  /** The scored pipeline shared by `search` and `searchTrees`: one
+    * pushed-down scan over `allTerms`, one stats broadcast, one bucket
+    * cogroup with the filter channel, `evaluate` per bucket, then the exact
+    * top-k merge. N queries pay one Spark job, not one each.
+    */
+  private def scoredSearch[Q](reader: Index.Reader, allTerms: Seq[String],
+      filterLangs: Seq[String], sim: Similarity, queries: Seq[Q],
+      pages: Seq[Page], mergeCollectMax: Long)(
+      evaluate: (Bucket, Seq[Q]) => Iterator[ScoredDoc]): Dataset[ScoredDoc] = {
+    val spark = reader.spark
+    import spark.implicits._
+    val blocks = bucketBlocks(reader, allTerms)
+    // the termdict stats lookup is cached on the reader, so repeat terms
+    // skip the job
+    val specB = spark.sparkContext.broadcast(ScoringSpec(
+      reader.termStatsMap(allTerms), reader.stats,
+      allTerms.flatMap(fieldOf).distinct.map(f => f -> reader.fieldStats(f).avgdl).toMap,
+      sim, queries))
+    val perBucket: Dataset[ScoredDoc] = blocks.groupByKey(_.bucket)
+      .cogroup(bucketFilters(reader, filterLangs).groupByKey(_.bucket)) {
+        (_, blockRows, filterRows) =>
+          val byTerm = blocksByTerm(blockRows)
+          if (byTerm.isEmpty) Iterator.empty
+          else {
+            val spec = specB.value
+            evaluate(new Bucket(spec, byTerm, assembleFilters(filterRows)), spec.queries)
+          }
+      }
+    mergeTopK(perBucket, pages, mergeCollectMax)
+  }
+
+  /** Exact global top-k per query == TopDocs.merge. Small Σk: driver-side
+    * (SURVEY.md §3.2 — candidates are <= k per bucket per query, and the
+    * collect replaces a whole extra shuffle stage, the same ids-then-fields
+    * coordinator role Solr's mergeIds plays). Large Σk: distributed
+    * groupByKey(qid) with a bounded heap per group — memory O(k) per task
+    * no matter how many buckets contributed, so a k=10^6 query never
+    * materializes k·buckets driver rows (VERDICT r3 what's-wrong #3).
+    */
+  private def mergeTopK(perBucket: Dataset[ScoredDoc], pages: Seq[Page],
+      mergeCollectMax: Long): Dataset[ScoredDoc] = {
+    val spark = perBucket.sparkSession
+    import spark.implicits._
+    val byQid = pages.map(p => p._1 -> p).toMap
+    if (pages.map(_._2.toLong).sum <= mergeCollectMax) {
       val merged = perBucket.collect().groupBy(_.qid).iterator.flatMap {
         case (qid, hits) =>
-          hits.sortBy(s => (-s.score, s.docId)).take(kByQid(qid))
+          hits.sortBy(s => (-s.score, s.docId)).take(byQid(qid)._2)
       }.toSeq
       spark.createDataset(merged)
     } else {
-      val qB = spark.sparkContext.broadcast(queries.map(q => q.qid -> q).toMap)
+      val pB = spark.sparkContext.broadcast(byQid)
       perBucket.groupByKey(_.qid).flatMapGroups { (qid, hits) =>
-        val heap = heapFor(qB.value(qid))
+        val (_, k, after) = pB.value(qid)
+        val heap = heapFor(k, after)
         hits.foreach(h => heap.offerUnordered(h.score, h.docId))
         heap.drain().iterator.map { case (d, s) => ScoredDoc(qid, d, s) }
       }
     }
   }
 
+  /** Flat QuerySpecs, scored by block-max WAND (or the leapfrog
+    * conjunction when the query has MUST clauses) per bucket.
+    */
+  def search(reader: Index.Reader, rawQueries: Seq[QuerySpec],
+      sim: graft.core.Similarity = Bm25(),
+      stopWords: Set[String] = Analyzer.EnglishStopWords,
+      mergeCollectMax: Long = MergeCollectMax): Dataset[ScoredDoc] = {
+    val spark = reader.spark
+    import spark.implicits._
+    val queries = rawQueries.map(analyzeQuery(_, stopWords))
+    val allTerms: Seq[String] =
+      queries.flatMap(q => q.should ++ q.must ++ q.mustNot).distinct
+    if (allTerms.isEmpty || queries.forall(q => q.should.isEmpty && q.must.isEmpty))
+      return spark.emptyDataset[ScoredDoc]
+    // unique epoch for this search run: ThetaBoard slots are keyed
+    // (epoch, qid) so concurrent/repeated searches never share floors
+    val thetaEpoch = java.util.UUID.randomUUID().toString
+    scoredSearch(reader, allTerms, queries.flatMap(_.langFilter).distinct, sim,
+      queries, queries.map(q => (q.qid, q.k, q.searchAfter)), mergeCollectMax) {
+      (b, qs) => qs.iterator.flatMap(q => flatTopK(b, q, s"$thetaEpoch/${q.qid}"))
+    }
+  }
+
+  /** One flat query's top-k within one bucket. */
+  private def flatTopK(b: Bucket, q: QuerySpec,
+      thetaKey: String): Iterator[ScoredDoc] = {
+    // a required term absent from this bucket: no hits here (checked on
+    // DISTINCT terms — duplicated MUST clauses must not mask a genuinely
+    // missing one)
+    if (q.must.nonEmpty && !q.must.distinct.forall(b.byTerm.contains))
+      return Iterator.empty
+    def boosted(t: String, tag: Int) = b.iter(t, q.boosts.getOrElse(t, 1.0), tag)
+    val musts = q.must.zipWithIndex.flatMap { case (t, i) => boosted(t, i) }
+    val shoulds = q.should.zipWithIndex.flatMap { case (t, i) => boosted(t, i) }.toArray
+    if (q.must.isEmpty && shoulds.isEmpty) return Iterator.empty
+    val notEx = BmwScorer.notExcluded(
+      q.mustNot.zipWithIndex.flatMap { case (t, i) => b.iter(t, 1.0, i) }.toArray)
+    val accept: Long => Boolean = q.langFilter match {
+      case None => d => b.live(d) && notEx(d)
+      case Some(lang) =>
+        val allowed = b.allowed(lang)
+        d => java.util.Arrays.binarySearch(allowed, d) >= 0 && b.live(d) && notEx(d)
+    }
+    // per-executor theta sharing across this query's buckets
+    // (MaxScoreAccumulator role — see BmwScorer.ThetaBoard)
+    val heap = heapFor(q.k, q.searchAfter).shareTheta(thetaKey)
+    val tb = q.dismaxTiebreak.getOrElse(-1.0)
+    if (q.must.nonEmpty)
+      // most-selective-first == highest maxScore (lowest df) first
+      BmwScorer.conjunctionTopK(musts.sortBy(-_.maxScore).toArray, shoulds,
+        q.k, accept, heap, tb, q.minShouldMatch)
+    else BmwScorer.wandTopK(shoulds, q.k, accept, heap, tb, q.minShouldMatch)
+    heap.drain().iterator.map { case (d, s) => ScoredDoc(q.qid, d, s) }
+  }
+
   /** Execute a compositional clause TREE (nested booleans, scored phrases,
     * pre-expanded multi-term clauses, lang filter clauses) — the execution
     * path for everything the flat QuerySpec cannot express (VERDICT r2
-    * next-1). Same distributed shape as `search`: pushed-down postings scan
-    * on the tree's terms, per-bucket scorer-tree evaluation (two-phase:
-    * approximate, confirm, score), exact global top-k merge. Lang filters
-    * ride the same BucketFilter channel but surface as unscored clauses
-    * (so they compose at ANY tree position, including mustNot); delete
-    * tombstones stay an accept-time filter. The tree must already be
-    * analyzed/lowered (QueryLowering) — no query-side re-analysis here.
+    * next-1). Lang filters ride the BucketFilter channel but surface as
+    * unscored clauses (so they compose at ANY tree position, including
+    * mustNot); delete tombstones stay an accept-time filter. The tree must
+    * already be analyzed/lowered (QueryLowering) — no query-side
+    * re-analysis here.
     */
   def searchTree(reader: Index.Reader, qid: String, root: ClauseNode,
       k: Int = 10, sim: graft.core.Similarity = Bm25(),
@@ -314,304 +403,60 @@ object QueryEngine {
   }
 
   /** BATCHED clause-tree execution (VERDICT r3 next-7): N independent trees
-    * share ONE pushed-down postings scan, one stats lookup, one bucket
-    * cogroup — a parsed-query workload pays one Spark job, not one per
-    * query, exactly like `search` does for flat QuerySpecs. Each tree gets
-    * its own scorer instances per bucket (fresh iterators — clauses cursor
-    * independently) and its own top-k heap. The final merge mirrors
-    * `search`'s MergeCollectMax switch: small Σk collects <= k·buckets
-    * rows on the driver (the Solr mergeIds role); large Σk flips to a
-    * distributed groupByKey(qid) merge with a bounded per-group heap, so
-    * a k=10^6 tree query never materializes k·buckets driver rows
-    * (VERDICT r3 what's-wrong #3).
+    * share one scored pipeline run. Each tree gets its own scorer instances
+    * per bucket (fresh iterators — clauses cursor independently), evaluated
+    * two-phase (approximate, confirm, score), and its own top-k heap.
     */
   def searchTrees(reader: Index.Reader, trees: Seq[TreeQuery],
       sim: graft.core.Similarity = Bm25(),
       mergeCollectMax: Long = MergeCollectMax): Dataset[ScoredDoc] = {
     val spark = reader.spark
     import spark.implicits._
-
     val allTerms = trees.flatMap(t => ClauseNode.terms(t.root)).distinct
     if (allTerms.isEmpty) return spark.emptyDataset[ScoredDoc]
-    val p = reader.postingsForTerms(allTerms).where($"term".isin(allTerms: _*))
-    val termStats: Map[String, (Long, Long)] = reader.termStatsMap(allTerms)
-    val stats = reader.stats
-    val fieldAvgdl: Map[String, Double] = allTerms.flatMap(fieldOf).distinct
-      .map(f => f -> reader.fieldStats(f).avgdl).toMap
-    val statsB = spark.sparkContext.broadcast(
-      (termStats, stats, trees, sim, fieldAvgdl))
-
-    val buckets: Dataset[BucketTermBlocks] = p.as[TermPostings].flatMap { tp =>
-      tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
-        .map { case (bucket, bs) =>
-          BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
-        }
-    }
-
-    val filterLangs = trees.flatMap(t => ClauseNode.langs(t.root)).distinct
-    val filters: Dataset[BucketFilter] = bucketFilters(reader, filterLangs)
-
-    val perBucket: Dataset[ScoredDoc] = buckets
-      .groupByKey(_.bucket)
-      .cogroup(filters.groupByKey(_.bucket)) { (_, blockRows, filterRows) =>
-        val (dfMap, st, ts, sim, fAvgdl) = statsB.value
-        val cache = sim.normTable(st.avgdl)
-        val fieldCaches: Map[String, Array[Double]] =
-          fAvgdl.map { case (f, a) => f -> sim.normTable(a) }
-        def cacheFor(term: String): Array[Double] =
-          fieldOf(term).flatMap(fieldCaches.get).getOrElse(cache)
-        val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
-        blockRows.foreach { r =>
-          byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
-        }
-        if (byTerm.isEmpty) Iterator.empty
+    scoredSearch(reader, allTerms, trees.flatMap(t => ClauseNode.langs(t.root)).distinct,
+      sim, trees, trees.map(t => (t.qid, t.k, t.searchAfter)), mergeCollectMax) {
+      (b, ts) => ts.iterator.flatMap { tq =>
+        val scorer = ClauseScorers.build(tq.root, (t, boost) => b.iter(t, boost),
+          b.allowed, b.termWeight(_), b.sim, b.synonymWeight)
+        if (scorer eq ClauseScorers.EmptyScorer) Iterator.empty
         else {
-          val allowedByLang: Map[String, Array[Long]] =
-            assembleFilters(filterRows)
-          // fresh iterator per clause: clauses cursor independently even
-          // when they reference the same term
-          def mkIter(term: String, boost: Double): Option[BmwScorer.TermIterator] =
-            byTerm.get(term).map { bs =>
-              val blocks = bs.sortBy(_.firstDocId).toArray
-              val (df, ttf) = dfMap.getOrElse(term, (0L, 0L))
-              val w = sim.weightFull(df, ttf, st.docCount, st.sumTotalTermFreq, boost)
-              new BmwScorer.TermIterator(w, cacheFor(term), blocks, 0, sim)
-            }
-          val deleted = allowedByLang.getOrElse(DeletedKey, Array.emptyLongArray)
-          val live: Long => Boolean =
-            if (deleted.isEmpty) _ => true
-            else d => java.util.Arrays.binarySearch(deleted, d) < 0
-          ts.iterator.flatMap { tq =>
-            val scorer = ClauseScorers.build(tq.root, mkIter,
-              l => allowedByLang.getOrElse(l, Array.emptyLongArray),
-              t => { val (df, ttf) = dfMap.getOrElse(t, (0L, 0L))
-                sim.weightFull(df, ttf, st.docCount, st.sumTotalTermFreq, 1.0) }, sim,
-              // SynonymQuery blended stats: df = max over members, ttf = sum
-              (syns, b) => {
-                val sstats = syns.map(t => dfMap.getOrElse(t, (0L, 0L)))
-                sim.weightFull(sstats.map(_._1).max, sstats.map(_._2).sum,
-                  st.docCount, st.sumTotalTermFreq, b)
-              })
-            if (scorer eq ClauseScorers.EmptyScorer) Iterator.empty
-            else {
-              val heap = tq.searchAfter match {
-                case Some((s, d)) => new BmwScorer.TopKHeap(tq.k, s, d)
-                case None => new BmwScorer.TopKHeap(tq.k)
-              }
-              var d = scorer.nextDoc()
-              while (d != BmwScorer.NoMoreDocs) {
-                if (live(d) && scorer.matches()) heap.offer(scorer.score(), d)
-                d = scorer.nextDoc()
-              }
-              heap.drain().iterator.map { case (doc, s) => ScoredDoc(tq.qid, doc, s) }
-            }
+          val heap = heapFor(tq.k, tq.searchAfter)
+          var d = scorer.nextDoc()
+          while (d != BmwScorer.NoMoreDocs) {
+            if (b.live(d) && scorer.matches()) heap.offer(scorer.score(), d)
+            d = scorer.nextDoc()
           }
+          heap.drain().iterator.map { case (doc, s) => ScoredDoc(tq.qid, doc, s) }
         }
-      }
-
-    // exact global merge — same two-mode switch as `search`
-    val kByQid = trees.map(t => t.qid -> t.k).toMap
-    if (trees.map(_.k.toLong).sum <= mergeCollectMax) {
-      val merged = perBucket.collect().groupBy(_.qid).iterator.flatMap {
-        case (qid, hits) =>
-          hits.sortBy(s => (-s.score, s.docId)).take(kByQid(qid))
-      }.toSeq
-      spark.createDataset(merged)
-    } else {
-      val tB = spark.sparkContext.broadcast(trees.map(t => t.qid -> t).toMap)
-      perBucket.groupByKey(_.qid).flatMapGroups { (qid, hits) =>
-        val tq = tB.value(qid)
-        val heap = tq.searchAfter match {
-          case Some((s, d)) => new BmwScorer.TopKHeap(tq.k, s, d)
-          case None => new BmwScorer.TopKHeap(tq.k)
-        }
-        hits.foreach(h => heap.offerUnordered(h.score, h.docId))
-        heap.drain().iterator.map { case (d, s) => ScoredDoc(qid, d, s) }
       }
     }
   }
 
   /** Distributed unscored conjunction over the index: docIds containing ALL
     * `rawTerms`, optionally position-verified as a phrase (slop >= 0;
-    * slop 0 = exact adjacency, slop > 0 = two-term sloppy window). A pure
-    * Dataset pipeline — per-bucket lazy leapfrog iterators feed the output
-    * directly, so hot conjunctions never buffer in a heap, truncate at a k,
-    * or round-trip through the driver (VERDICT r1 what's-wrong #3).
-    * Tombstoned docs are anti-joined out. Result is NOT globally sorted.
+    * slop 0 = exact adjacency, slop > 0 = sloppy window) at the terms'
+    * stop-hole query offsets. Duplicate terms are fine (ADVICE r2 #4): the
+    * position list simply repeats at several offsets. Streams per-bucket
+    * leapfrog matches straight into the output — no heap, no k, no driver
+    * round-trip (VERDICT r1 what's-wrong #3). Result is NOT globally
+    * sorted. Span shapes (first / near / not) are SpanAlgebra trees run
+    * through `matchSpanTree`.
     */
   def matchAllTerms(reader: Index.Reader, rawTerms: Seq[String],
       slop: Int = -1,
-      stopWords: Set[String] = Analyzer.EnglishStopWords,
-      /** SpanFirstQuery window [B .../search/spans/SpanFirstQuery.java]:
-        * when >= 0, the exact-phrase (or single-term) span must END at a
-        * position <= spanEnd. Mutually exclusive with sloppy matching.
-        */
-      spanEnd: Int = -1,
-      /** SpanNearQuery [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java]:
-        * when >= 0, the terms are independent single-token subspans that
-        * must co-occur within a window of total slack <= nearSlop —
-        * in query order when nearOrdered, any order otherwise. Mutually
-        * exclusive with phrase slop and spanFirst.
-        */
-      nearSlop: Int = -1, nearOrdered: Boolean = true,
-      /** SpanNotQuery [B .../queries/spans/SpanNotQuery.java] exclusion
-        * window: when >= 0, exactly 2 terms (include, exclude) and a doc
-        * matches iff some include position is > spanNotDist from every
-        * exclude position. Only covers docs containing BOTH terms — the
-        * caller unions in include-only docs (searchSpanNot).
-        */
-      spanNotDist: Int = -1): Dataset[Long] = {
-    require(spanEnd < 0 || slop <= 0,
-      "spanFirst wraps an exact span — sloppy windows don't compose here")
-    require(nearSlop < 0 || (slop < 0 && spanEnd < 0),
-      "spanNear terms are independent subspans — phrase/spanFirst don't compose here")
-    require(spanNotDist < 0 ||
-      (slop < 0 && spanEnd < 0 && nearSlop < 0 && rawTerms.size == 2),
-      "spanNot takes exactly (include, exclude) and composes with nothing else")
-    val spark = reader.spark
-    import spark.implicits._
-    // tokenize keeping a running query-position counter; stop words advance
-    // it but emit nothing — the query-side mirror of the index's StopFilter
-    // position-increment holes, so "state of art" verifies at offsets (0,2)
-    var qpos = 0
-    val withOffsets: Seq[(String, Int)] = rawTerms.flatMap { raw =>
-      Analyzer.tokenize(raw).map { tok =>
-        val p = qpos; qpos += 1; (tok, p)
-      }
-    }.filterNot { case (t, _) => stopWords.contains(t) }
-    val terms = withOffsets.map(_._1)
-    val offsets = withOffsets.map(_._2).toArray
-    require(terms.nonEmpty, s"no indexable terms in $rawTerms")
-    // duplicate terms are fine (ADVICE r2 #4): each query offset gets its
-    // own iterator over the same posting blocks, and the position lists
-    // simply repeat at several offsets
-
-    val p = reader.postingsForTerms(terms.distinct).where($"term".isin(terms.distinct: _*))
-    val buckets: Dataset[BucketTermBlocks] = p.as[TermPostings].flatMap { tp =>
-      tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
-        .map { case (bucket, bs) =>
-          BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
-        }
-    }
-    val termsB = spark.sparkContext.broadcast((terms.toArray, offsets))
-    val slopLocal = slop
-    val spanEndLocal = spanEnd
-    val nearSlopLocal = nearSlop
-    val nearOrderedLocal = nearOrdered
-    val spanNotLocal = spanNotDist
-    val matched: Dataset[Long] = buckets.groupByKey(_.bucket)
-      .flatMapGroups { (_, rows) =>
-        val (qTerms, qOffsets) = termsB.value
-        val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
-        rows.foreach { r =>
-          byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
-        }
-        if (!qTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          val dummyCache = new Array[Double](256) // never scored
-          // term order preserved: positions(i) must line up with offset i
-          val iters = qTerms.map { t =>
-            new BmwScorer.TermIterator(0.0, dummyCache,
-              byTerm(t).sortBy(_.firstDocId).toArray)
-          }
-          val accept: Long => Boolean =
-            if (slopLocal < 0 && spanEndLocal < 0 && nearSlopLocal < 0 &&
-              spanNotLocal < 0) _ => true
-            else { _ =>
-              val posLists = iters.map(_.positions())
-              require(posLists.forall(_ != null),
-                "positional query over an index built without indexPositions")
-              if (spanNotLocal >= 0)
-                PhraseMatcher.spanNotNear(posLists(0), posLists(1), spanNotLocal)
-              else if (nearSlopLocal >= 0) {
-                if (nearOrderedLocal)
-                  PhraseMatcher.spanNearOrdered(posLists, nearSlopLocal)
-                else PhraseMatcher.spanNearUnordered(posLists, nearSlopLocal)
-              }
-              else if (spanEndLocal >= 0)
-                PhraseMatcher.matchFirst(posLists, qOffsets, spanEndLocal)
-              else if (slopLocal == 0) PhraseMatcher.exactMatch(posLists, qOffsets)
-              else PhraseMatcher.sloppyFreq(posLists, qOffsets, slopLocal) > 0
-            }
-          BmwScorer.conjunctionIterator(iters, accept)
-        }
-      }
-    if (!reader.hasTombstones) matched
-    else matched.toDF("docId")
-      .join(reader.tombstones.toDF("docId"), Seq("docId"), "left_anti")
-      .as[Long]
-  }
-
-  /** SpanNearQuery over COMPOSITE subspans — the nested span algebra
-    * [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java]:
-    * each element of `subspans` is a term sequence (length 1 = SpanTerm,
-    * longer = an exact-phrase span), and the subspans' spans must fall
-    * within a `slop` window, in query order or any order. Same distributed
-    * bucket pipeline as matchAllTerms: the cheap phase aligns ALL member
-    * terms (every subspan's members are required), the expensive phase
-    * computes each subspan's anchor spans and runs the window check.
-    */
-  def matchSpanNearComposite(reader: Index.Reader, subspans: Seq[Seq[String]],
-      slop: Int, ordered: Boolean = true,
       stopWords: Set[String] = Analyzer.EnglishStopWords): Dataset[Long] = {
     val spark = reader.spark
     import spark.implicits._
-    // per-subspan analyzed members with stop-hole offsets (query position
-    // counter resets per subspan — subspans are independent spans)
-    val analyzed: Seq[(Array[String], Array[Int])] = subspans.map { raw =>
-      var qpos = 0
-      val withOffsets = raw.flatMap { r =>
-        Analyzer.tokenize(r).map { tok => val p = qpos; qpos += 1; (tok, p) }
-      }.filterNot { case (t, _) => stopWords.contains(t) }
-      require(withOffsets.nonEmpty, s"no indexable terms in subspan $raw")
-      (withOffsets.map(_._1).toArray, withOffsets.map(_._2).toArray)
-    }
-    val widths: Array[Int] =
-      analyzed.map { case (_, off) => off.last - off.head + 1 }.toArray
-    val allTerms = analyzed.flatMap(_._1)
-
-    val p = reader.postingsForTerms(allTerms.distinct).where($"term".isin(allTerms.distinct: _*))
-    val buckets: Dataset[BucketTermBlocks] = p.as[TermPostings].flatMap { tp =>
-      tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
-        .map { case (bucket, bs) =>
-          BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
-        }
-    }
-    val specB = spark.sparkContext.broadcast((analyzed, widths, slop, ordered))
-    val matched: Dataset[Long] = buckets.groupByKey(_.bucket)
-      .flatMapGroups { (_, rows) =>
-        val (spans, ws, slopL, orderedL) = specB.value
-        val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
-        rows.foreach { r =>
-          byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
-        }
-        if (!spans.flatMap(_._1).forall(byTerm.contains)) Iterator.empty
-        else {
-          val dummyCache = new Array[Double](256) // never scored
-          // one iterator per (subspan, member), grouped by subspan
-          val iters: Array[Array[BmwScorer.TermIterator]] = spans.map {
-            case (terms, _) => terms.map { t =>
-              new BmwScorer.TermIterator(0.0, dummyCache,
-                byTerm(t).sortBy(_.firstDocId).toArray)
-            }
-          }.toArray
-          val flat = iters.flatten
-          val accept: Long => Boolean = { _ =>
-            val starts = Array.tabulate(iters.length) { i =>
-              val posLists = iters(i).map(_.positions())
-              require(posLists.forall(_ != null),
-                "positional query over an index built without indexPositions")
-              PhraseMatcher.spanStartsExact(posLists, spans(i)._2)
-            }
-            PhraseMatcher.spanNearComposite(starts, ws, slopL, orderedL)
-          }
-          BmwScorer.conjunctionIterator(flat, accept)
-        }
-      }
-    if (!reader.hasTombstones) matched
-    else matched.toDF("docId")
-      .join(reader.tombstones.toDF("docId"), Seq("docId"), "left_anti")
-      .as[Long]
+    val withOffsets = queryPositions(rawTerms, stopWords)
+    require(withOffsets.nonEmpty, s"no indexable terms in $rawTerms")
+    val terms = withOffsets.map(_._1)
+    val offsets = withOffsets.map(_._2).toArray
+    val counter: (String => Array[Int]) => Double =
+      if (slop < 0) _ => 1.0
+      else if (slop == 0) pos => PhraseMatcher.exactFreq(terms.map(pos).toArray, offsets)
+      else pos => PhraseMatcher.sloppyFreq(terms.map(pos).toArray, offsets, slop)
+    matchPositional(reader, terms, terms, counter)((d, _) => d)
   }
 
   /** Execute a COMPOSABLE span tree (SpanAlgebra) — the closure of the
@@ -629,7 +474,7 @@ object QueryEngine {
     import spark.implicits._
     matchPositional(reader, SpanNode.allTerms(root).distinct,
       SpanNode.requiredTerms(root).distinct,
-      pos => if (SpanAlgebra.matches(root, pos)) 1.0 else 0.0).map(_._1)
+      pos => if (SpanAlgebra.matches(root, pos)) 1.0 else 0.0)((d, _) => d)
   }
 
   /** Execute an INTERVAL tree (IntervalAlgebra — Lucene's minimal-interval
@@ -644,8 +489,7 @@ object QueryEngine {
     import spark.implicits._
     matchPositional(reader, IntervalNode.allTerms(root).distinct,
       IntervalNode.requiredTerms(root).distinct,
-      pos => IntervalAlgebra.count(root, pos).toDouble)
-      .map { case (d, n) => (d, n.toInt) }
+      pos => IntervalAlgebra.count(root, pos).toDouble)((d, n) => (d, n.toInt))
   }
 
   /** SCORED interval query — IntervalQuery + saturation score function
@@ -659,19 +503,15 @@ object QueryEngine {
   def matchIntervalScored(reader: Index.Reader, root: IntervalNode,
       widthSum: Int, pivot: Double = 1.0,
       boost: Double = 1.0): Dataset[(Long, Double)] = {
+    import reader.spark.implicits._
     matchPositional(reader, IntervalNode.allTerms(root).distinct,
       IntervalNode.requiredTerms(root).distinct,
       pos => {
-        val ivs = IntervalAlgebra.eval(root, pos)
-        var freq = 0.0
-        var i = 0
-        while (i < ivs.length) {
-          val w = SpanAlgebra.endOf(ivs(i)) - SpanAlgebra.startOf(ivs(i))
-          freq += 1.0 / (1 + (w - widthSum))
-          i += 1
-        }
+        val freq = IntervalAlgebra.eval(root, pos).iterator.map { iv =>
+          1.0 / (1 + (SpanAlgebra.endOf(iv) - SpanAlgebra.startOf(iv) - widthSum))
+        }.foldLeft(0.0)(_ + _)
         if (freq == 0.0) 0.0 else boost * freq / (freq + pivot)
-      })
+      })((d, n) => (d, n))
   }
 
   /** Payload-function scoring over positional postings — PayloadScoreQuery
@@ -682,6 +522,7 @@ object QueryEngine {
     */
   def matchPayloadMax(reader: Index.Reader, term: String,
       payloadOf: Int => Double): Dataset[(Long, Double)] = {
+    import reader.spark.implicits._
     matchPositional(reader, Seq(term), Seq(term), pos => {
       val ps = pos(term)
       var best = 0.0
@@ -692,51 +533,41 @@ object QueryEngine {
         i += 1
       }
       best
-    })
+    })((d, n) => (d, n))
   }
 
-  /** Shared positional-match scaffold for the span and interval algebras:
-    * postings pruned to the tree's terms (parquet row-group skip), re-keyed
-    * to docId buckets, then a doc-at-a-time driver — the conjunction
-    * iterator over the REQUIRED terms when the tree requires any, else the
-    * min-disjunction over all present terms — calls `counter` with the
-    * candidate doc's per-term position lookup and emits (docId, n) for
-    * every doc with n > 0 occurrences.
+  /** The unscored pipeline: the bucket scan over `all`, then a
+    * doc-at-a-time driver per bucket — the conjunction iterator over the
+    * REQUIRED terms when there are any, else the min-disjunction over all
+    * present terms — calls `counter` with the candidate doc's per-term
+    * position lookup (only counters that need positions read them) and
+    * emits `emit(docId, n)` for every live doc with n > 0.
     */
-  private def matchPositional(reader: Index.Reader, all: Seq[String],
-      req: Seq[String],
-      counter: (String => Array[Int]) => Double): Dataset[(Long, Double)] = {
+  private def matchPositional[T: Encoder](reader: Index.Reader, all: Seq[String],
+      req: Seq[String], counter: (String => Array[Int]) => Double)(
+      emit: (Long, Double) => T): Dataset[T] = {
     val spark = reader.spark
     import spark.implicits._
-    require(all.nonEmpty, "positional tree references no terms")
+    require(all.nonEmpty, "positional query references no terms")
 
-    val p = reader.postingsForTerms(all).where($"term".isin(all: _*))
-    val buckets: Dataset[BucketTermBlocks] = p.as[TermPostings].flatMap { tp =>
-      tp.blocks.groupBy(b => CorpusIds.partitionOf(b.firstDocId)).iterator
-        .map { case (bucket, bs) =>
-          BucketTermBlocks(bucket, tp.term, bs.sortBy(_.firstDocId))
-        }
-    }
     val specB = spark.sparkContext.broadcast(
       (counter, req.toArray.distinct, all.toArray.distinct))
-    val matched: Dataset[(Long, Double)] = buckets.groupByKey(_.bucket)
+    val matched: Dataset[T] = bucketBlocks(reader, all.distinct)
+      .groupByKey(_.bucket)
       .flatMapGroups { (_, rows) =>
         val (cnt, reqT, allT) = specB.value
-        val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingBlock]]
-        rows.foreach { r =>
-          byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) ++= r.blocks
-        }
+        val byTerm = blocksByTerm(rows)
         if (!reqT.forall(byTerm.contains)) Iterator.empty
         else {
           val dummyCache = new Array[Double](256) // never scored
           val iters: Map[String, BmwScorer.TermIterator] =
             allT.iterator.filter(byTerm.contains).map { t =>
-              t -> new BmwScorer.TermIterator(0.0, dummyCache,
-                byTerm(t).sortBy(_.firstDocId).toArray)
+              t -> new BmwScorer.TermIterator(0.0, dummyCache, byTerm(t))
             }.toMap
           // accepted-doc counts: the match drivers PREFETCH the next
           // candidate before a mapped iterator sees the current one, so
-          // the count is stashed per doc, not in a single slot
+          // the count is stashed per doc and dropped once the doc is
+          // emitted (at most the current and the prefetched doc live)
           val counts = new mutable.LongMap[Double]()
           def accept(doc: Long): Boolean = {
             def posOf(t: String): Array[Int] = iters.get(t) match {
@@ -761,42 +592,34 @@ object QueryEngine {
               BmwScorer.conjunctionIterator(
                 reqT.map(t => iters(t)).toArray, accept)
             else {
-              // disjunction driver: min over all present iterators
+              // disjunction driver: the min doc over all present iterators
               val its = iters.valuesIterator.toArray
-              new Iterator[Long] {
-                private def findFrom(target0: Long): Long = {
-                  var target = target0
-                  while (true) {
-                    var min = BmwScorer.NoMoreDocs
-                    var i = 0
-                    while (i < its.length) {
-                      var d = its(i).docId
-                      if (d < target) d = its(i).advance(target)
-                      if (d < min) min = d
-                      i += 1
-                    }
-                    if (min == BmwScorer.NoMoreDocs) return BmwScorer.NoMoreDocs
-                    if (accept(min)) return min
-                    target = min + 1
+              def findFrom(from: Long): Long = {
+                var target = from
+                var min = 0L
+                do {
+                  min = BmwScorer.NoMoreDocs
+                  var i = 0
+                  while (i < its.length) {
+                    var d = its(i).docId
+                    if (d < target) d = its(i).advance(target)
+                    if (d < min) min = d
+                    i += 1
                   }
-                  BmwScorer.NoMoreDocs // unreachable
-                }
-                private var nextDoc = findFrom(0L)
-                def hasNext: Boolean = nextDoc != BmwScorer.NoMoreDocs
-                def next(): Long = {
-                  val r = nextDoc
-                  nextDoc = findFrom(r + 1)
-                  r
-                }
+                  target = min + 1
+                } while (min != BmwScorer.NoMoreDocs && !accept(min))
+                min
               }
+              Iterator.iterate(findFrom(0L))(d => findFrom(d + 1))
+                .takeWhile(_ != BmwScorer.NoMoreDocs)
             }
-          docs.map(d => (d, counts.getOrElse(d, 1.0)))
+          docs.map { d => val n = counts(d); counts -= d; emit(d, n) }
         }
       }
+    // live docs only: postings keep tombstoned docs until compaction
     if (!reader.hasTombstones) matched
-    else matched.toDF("docId", "n")
-      .join(reader.tombstones.toDF("docId"), Seq("docId"), "left_anti")
-      .as[(Long, Double)]
+    else matched.join(reader.tombstones.toDF("deleted"),
+      matched(matched.columns.head) === $"deleted", "left_anti").as[T]
   }
 
   /** Top-k hits joined back to document identity (the two-phase
@@ -805,7 +628,6 @@ object QueryEngine {
     */
   def searchWithMeta(reader: Index.Reader, queries: Seq[QuerySpec],
       sim: graft.core.Similarity = Bm25()): DataFrame = {
-    val spark = reader.spark
     val hits = search(reader, queries, sim)
     reader.docMeta.join(broadcast(hits.toDF()), "docId")
       .select("qid", "docId", "score", "repo", "path", "commit", "lang",

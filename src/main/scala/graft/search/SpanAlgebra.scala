@@ -4,13 +4,14 @@ import graft.core.PhraseMatcher
 import scala.collection.mutable
 
 /** The composable span-query algebra
-  * [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanQuery.java]:
-  * unlike the fixed-shape kernels in PhraseMatcher (which cover the flat
-  * span entries), these nodes CLOSE under composition — SpanOr under
-  * SpanNear, SpanNot as a subspan, SpanFirst wrapping a composite — by
-  * evaluating every node to its full set of (start, end) occurrence spans
-  * within one document, exactly the Spans enumeration contract Lucene's
-  * span weights expose [B .../queries/spans/Spans.java].
+  * [B lucene/core/src/java/org/apache/lucene/queries/spans/SpanQuery.java],
+  * the one evaluator behind every span query, flat shapes (SpanFirst over a
+  * term or phrase, SpanNear over terms, SpanNot over two terms) included.
+  * The nodes CLOSE under composition — SpanOr under SpanNear, SpanNot as a
+  * subspan, SpanFirst wrapping a composite — by evaluating every node to
+  * its full set of (start, end) occurrence spans within one document,
+  * exactly the Spans enumeration contract Lucene's span weights expose
+  * [B .../queries/spans/Spans.java].
   *
   * A span is packed into one Long as (start << 32) | end (end exclusive:
   * a single token at position p is the span [p, p+1)), so span sets are
@@ -55,15 +56,16 @@ object SpanNode {
   /** SpanNotQuery [B .../queries/spans/SpanNotQuery.java] with a symmetric
     * pre/post window: include spans with NO exclude span within `dist`
     * (an exclude span [s2,e2) kills include [s,e) iff it overlaps
-    * [s - dist, e + dist) — for single-token spans exactly the
-    * |q - p| <= dist window of PhraseMatcher.spanNotNear).
+    * [s - dist, e + dist) — for single-token spans, the |q - p| <= dist
+    * window). The exclude side is optional: without it every include span
+    * survives.
     */
   final case class SNot(include: SpanNode, exclude: SpanNode,
       dist: Int) extends SpanNode
 
   /** SpanFirstQuery [B .../queries/spans/SpanFirstQuery.java]: child spans
-    * whose END (exclusive) is <= `end` — PhraseMatcher.matchFirst's
-    * p + width <= end window, now over any composite child.
+    * whose END (exclusive) is <= `end` — a term or phrase anchored at p
+    * qualifies iff p + width <= end; any composite child works the same.
     */
   final case class SFirst(child: SpanNode, end: Int) extends SpanNode
 

@@ -511,7 +511,7 @@ class CoreCodecSpec extends AnyFunSuite {
   }
 
   test("PhraseMatcher spanNear: ordered chains, unordered minimal windows") {
-    import PhraseMatcher.{spanNearOrdered, spanNearUnordered}
+    import SpanOracles.{spanNearOrdered, spanNearUnordered}
     // ordered: a@3 .. b@5 -> slack (5-3+1)-2 = 1
     assert(spanNearOrdered(Array(Array(3), Array(5)), 1))
     assert(!spanNearOrdered(Array(Array(3), Array(5)), 0))
@@ -539,20 +539,21 @@ class CoreCodecSpec extends AnyFunSuite {
     assert(!spanNearUnordered(Array(Array(1), Array[Int]()), 100))
     assert(!spanNearOrdered(Array(Array(1), Array[Int]()), 100))
     // spanNot: include@10 with exclude@12 is inside dist 3 -> no match...
-    assert(!PhraseMatcher.spanNotNear(Array(10), Array(12), 3))
+    assert(!SpanOracles.spanNotNear(Array(10), Array(12), 3))
     // ...but a second include occurrence far away rescues the doc
-    assert(PhraseMatcher.spanNotNear(Array(10, 50), Array(12), 3))
+    assert(SpanOracles.spanNotNear(Array(10, 50), Array(12), 3))
     // boundary: |12-10|=2 <= 2 excluded, dist 1 admits
-    assert(!PhraseMatcher.spanNotNear(Array(10), Array(12), 2))
-    assert(PhraseMatcher.spanNotNear(Array(10), Array(12), 1))
+    assert(!SpanOracles.spanNotNear(Array(10), Array(12), 2))
+    assert(SpanOracles.spanNotNear(Array(10), Array(12), 1))
     // no exclusions at all -> include alone matches
-    assert(PhraseMatcher.spanNotNear(Array(5), Array[Int](), 10))
+    assert(SpanOracles.spanNotNear(Array(5), Array[Int](), 10))
     // every include bracketed by exclusions -> no match
-    assert(!PhraseMatcher.spanNotNear(Array(10, 20), Array(9, 21), 2))
+    assert(!SpanOracles.spanNotNear(Array(10, 20), Array(9, 21), 2))
   }
 
   test("composite spans: phrase anchors + variable-width near windows") {
-    import PhraseMatcher.{spanStartsExact, spanNearComposite}
+    import PhraseMatcher.spanStartsExact
+    import SpanOracles.spanNearComposite
     // phrase anchors: "key order" at 3 and 9
     assert(spanStartsExact(Array(Array(3, 9, 20), Array(4, 10, 15)), Array(0, 1))
       .sameElements(Array(3, 9)))
@@ -577,14 +578,7 @@ class CoreCodecSpec extends AnyFunSuite {
 
   test("spanNear property: sweep/greedy agree with brute-force enumeration") {
     // small random position lists -> compare against the O(prod) reference
-    val genLists: Gen[(Array[Array[Int]], Int)] = for {
-      n <- Gen.chooseNum(1, 4)
-      lists <- Gen.listOfN(n, for {
-        sz <- Gen.chooseNum(0, 5)
-        ps <- Gen.listOfN(sz, Gen.chooseNum(0, 30))
-      } yield ps.distinct.sorted.toArray)
-      slop <- Gen.chooseNum(0, 10)
-    } yield (lists.toArray, slop)
+    val genLists = SpanOracles.positionLists
     def cartesian(lists: Array[Array[Int]]): Iterator[List[Int]] =
       lists.foldRight(Iterator(List.empty[Int])) { (l, acc) =>
         val tails = acc.toList
@@ -600,9 +594,9 @@ class CoreCodecSpec extends AnyFunSuite {
           pick.sliding(2).forall { case List(a, b) => b > a; case _ => true } &&
             (pick.last - pick.head + 1) - lists.length <= slop
         }
-      assert(PhraseMatcher.spanNearUnordered(lists, slop) == bruteUnordered,
+      assert(SpanOracles.spanNearUnordered(lists, slop) == bruteUnordered,
         s"unordered mismatch slop=$slop lists=${lists.map(_.mkString(",")).mkString(";")}")
-      assert(PhraseMatcher.spanNearOrdered(lists, slop) == bruteOrdered,
+      assert(SpanOracles.spanNearOrdered(lists, slop) == bruteOrdered,
         s"ordered mismatch slop=$slop lists=${lists.map(_.mkString(",")).mkString(";")}")
     }
   }

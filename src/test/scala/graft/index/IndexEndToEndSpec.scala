@@ -3,7 +3,7 @@ package graft.index
 import graft._
 import graft.core.{Analyzer, SmallFloatUtil}
 import graft.corpus.CorpusGen
-import graft.search.{NaiveSearch, QueryEngine, ReferenceQueries}
+import graft.search.{NaiveSearch, QueryEngine, ReferenceQueries, SpanNode}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -432,6 +432,16 @@ class IndexEndToEndSpec extends AnyFunSuite {
     val viaShuffle = canon(QueryEngine
       .search(reader, ReferenceQueries.all, mergeCollectMax = 0).collect())
     assert(viaDriver == viaShuffle)
+    // the clause-tree evaluator shares the same merge: its shuffle mode
+    // must equal its driver mode, hit for hit
+    val trees = ReferenceQueries.all.filter(_.dismaxTiebreak.isEmpty).map { q0 =>
+      val q = QueryEngine.analyzeQuery(q0, Analyzer.EnglishStopWords)
+      TreeQuery(q.qid, QueryEngine.treeOf(q), q.k)
+    }
+    val treeDriver = canon(QueryEngine.searchTrees(reader, trees).collect())
+    val treeShuffle = canon(QueryEngine
+      .searchTrees(reader, trees, mergeCollectMax = 0).collect())
+    assert(treeDriver.nonEmpty && treeDriver == treeShuffle)
   }
 
   test("compaction: distributed tombstone cogroup == broadcast path, positions survive") {
@@ -899,17 +909,18 @@ class IndexEndToEndSpec extends AnyFunSuite {
     val toks0 = Analyzer.tokenize(keyed.minBy(_._1)._2)
     val Seq(pa, pb) = toks0.take(2).toSeq
     val end = 25
+    def spanFirst(terms: Seq[String], e: Int): Array[Long] =
+      QueryEngine.matchSpanTree(reader,
+        SpanNode.SFirst(QueryEngine.spanTermOf(terms), e)).collect()
     // single-term span: an occurrence at raw position p with p + 1 <= end
-    val gotTerm = QueryEngine.matchAllTerms(reader, Seq(pa), spanEnd = end)
-      .collect().sorted.toSeq
+    val gotTerm = spanFirst(Seq(pa), end).sorted.toSeq
     val wantTerm = keyed.filter { case (_, text) =>
       Analyzer.tokenize(text).take(end).contains(pa)
     }.map(_._1).sorted.toSeq
     assert(wantTerm.nonEmpty)
     assert(gotTerm == wantTerm)
     // phrase span: anchor p with tok(p)=pa, tok(p+1)=pb, p + 2 <= end
-    val gotPh = QueryEngine.matchAllTerms(reader, Seq(pa, pb), spanEnd = end)
-      .collect().sorted.toSeq
+    val gotPh = spanFirst(Seq(pa, pb), end).sorted.toSeq
     val wantPh = keyed.filter { case (_, text) =>
       val ts = Analyzer.tokenize(text)
       ts.zipWithIndex.exists { case (t, i) =>
@@ -919,9 +930,91 @@ class IndexEndToEndSpec extends AnyFunSuite {
     assert(wantPh.nonEmpty)
     assert(gotPh == wantPh)
     // tighter window prunes: every tighter-window hit is a wider-window hit
-    val tight = QueryEngine.matchAllTerms(reader, Seq(pa), spanEnd = 3)
-      .collect().toSet
+    val tight = spanFirst(Seq(pa), 3).toSet
     assert(tight.subsetOf(gotTerm.toSet))
+  }
+
+  /** Docs keyed by docId with their raw token streams (stop words keep
+    * their slot, like the indexed positions), plus the first doc's first
+    * two tokens and its first later token that differs from both.
+    */
+  private def spanFixture(): (Array[(Long, Array[String])], String, String, String) = {
+    import spark.implicits._
+    val reader = Index.reader(spark, indexDir)
+    val keyed = spark.read.parquet(s"$corpusDir/corpus.parquet").join(
+      reader.docMeta.select($"docId", $"repo", $"path"), Seq("repo", "path"))
+      .select($"docId", $"content").collect()
+      .map(r => r.getLong(0) -> Analyzer.tokenize(r.getString(1)))
+    val toks0 = keyed.minBy(_._1)._2
+    val Seq(pa, pb) = toks0.take(2).toSeq
+    val pc = toks0.drop(2).find(t =>
+      !Analyzer.EnglishStopWords(t) && t != pa && t != pb).get
+    assert(pa != pb && Seq(pa, pb).forall(t => !Analyzer.EnglishStopWords(t)))
+    (keyed, pa, pb, pc)
+  }
+
+  private def positionsOf(ts: Array[String], t: String): Seq[Int] =
+    ts.indices.filter(ts(_) == t)
+
+  test("span near (ordered + unordered) over terms matches a naive position scan") {
+    import graft.search.SpanNode._
+    val reader = Index.reader(spark, indexDir)
+    val (keyed, pa, pb, _) = spanFixture()
+    val slop = 3
+    for (ordered <- Seq(true, false)) {
+      val got = QueryEngine.matchSpanTree(reader,
+        SNear(Seq(term(pa), term(pb)), slop, ordered)).collect().toSet
+      // one position per term, slack (last - first + 1) - 2 <= slop; in
+      // query order (strictly after) when ordered
+      val want = keyed.filter { case (_, ts) =>
+        positionsOf(ts, pa).exists(i => positionsOf(ts, pb).exists { j =>
+          (!ordered || j > i) && (math.max(i, j) - math.min(i, j) + 1) - 2 <= slop
+        })
+      }.map(_._1).toSet
+      assert(want.nonEmpty, s"ordered=$ordered: fixture has no near pair")
+      assert(got == want, s"ordered=$ordered")
+    }
+  }
+
+  test("span not over two terms matches a naive position scan, exclude optional") {
+    import graft.search.SpanNode._
+    val reader = Index.reader(spark, indexDir)
+    val (keyed, pa, pb, _) = spanFixture()
+    val dist = 2
+    val got = QueryEngine.matchSpanTree(reader,
+      SNot(term(pa), term(pb), dist)).collect().toSet
+    // some pa occurrence with every pb occurrence more than dist away
+    val want = keyed.filter { case (_, ts) =>
+      positionsOf(ts, pa).exists(i => positionsOf(ts, pb).forall(j => math.abs(j - i) > dist))
+    }.map(_._1).toSet
+    assert(got == want)
+    // both branches are exercised: docs without the exclude term, and docs
+    // where the window check admits an occurrence despite the exclude
+    val withExclude = keyed.filter(_._2.contains(pb)).map(_._1).toSet
+    assert((want -- withExclude).nonEmpty && (want & withExclude).nonEmpty)
+  }
+
+  test("composite span near (phrase + term subspans) matches a naive position scan") {
+    import graft.search.SpanNode._
+    val reader = Index.reader(spark, indexDir)
+    val (keyed, pa, pb, pc) = spanFixture()
+    val slop = 6
+    for (ordered <- Seq(true, false)) {
+      val got = QueryEngine.matchSpanTree(reader, SNear(Seq(
+        QueryEngine.spanTermOf(Seq(pa, pb)), QueryEngine.spanTermOf(Seq(pc))),
+        slop, ordered)).collect().toSet
+      // phrase span [k, k+2) and term span [m, m+1): slack =
+      // (window end - window start) - 3; ordered needs m >= k + 2
+      val want = keyed.filter { case (_, ts) =>
+        val phrase = positionsOf(ts, pa).filter(k => k + 1 < ts.length && ts(k + 1) == pb)
+        phrase.exists(k => positionsOf(ts, pc).exists { m =>
+          (!ordered || m >= k + 2) &&
+            (math.max(k + 2, m + 1) - math.min(k, m)) - 3 <= slop
+        })
+      }.map(_._1).toSet
+      assert(want.nonEmpty, s"ordered=$ordered: fixture has no composite match")
+      assert(got == want, s"ordered=$ordered")
+    }
   }
 
   test("grammar corpus: every accept case lowers AND executes through the tree") {
